@@ -34,55 +34,64 @@ from .utils import wrap
 
 
 class BaseFrame:
+    """Row-position state: what a frame knows about its row positions.
+
+    The index values of a frame live in the plan; five flags next to it
+    say how those values relate to row positions:
+
+    - ``_mid_index``: ``__idx_0`` holds a *provisional* rowid, not the
+      pandas labels — a monotonic id (unique, order-correlated, not
+      contiguous) or a true file position.  The reference synthesizes
+      the 0-based labels eagerly (``row_number() OVER () - 1``,
+      alchemy.py:332-334); here they are made only when index values
+      become observable (export, positional access, alignment against a
+      value-indexed frame), so a scan->project->agg pipeline runs no
+      rowid job at all.
+    - ``_mid_dense``: the index holds TRUE file positions (parquet
+      ``_metadata.row_index`` on a single-file scan), so a mid already
+      is the pandas RangeIndex — densifying it is a metadata flip that
+      keeps this flag, and after a filter export keeps pandas' sparse
+      original labels.
+    - ``_mid_origin``: identity token of a non-dense mid.  Monotonic ids
+      encode partition layout, so raw values are comparable only between
+      frames minted by the same scan (a file-set key, or a fresh
+      ``object()``); ``None`` means never directly comparable.
+    - ``_explicit_order``: the user imposed a row order (``sort_values``,
+      ``sort_index``, ``nlargest``, ``value_counts``, a non-default
+      index on ingest, a concat of densified parts): export follows
+      PLAN order.  False means row order IS index order and export
+      re-sorts client-side by the index, which keeps plan-level
+      reordering (window partitionBy, join shuffles) out of results.
+    - ``_rows_reordered``: a verb may have reordered the PLAN relative
+      to the index (window evaluation, joins, group-applies, a
+      descending top-n), so positional accessors re-sort before
+      slicing.  Kept False on the plain scan->project->filter path so
+      ``head()`` stays an early-exit LIMIT.
+
+    Only this class writes the three mid flags.  Every other verb
+    states its result through one of three helpers:
+
+    - :meth:`_derive_rows` — a row-preserving verb (projection, filter)
+      copies all five flags from its source;
+    - :meth:`_merge_rows` — a verb whose plan may reorder rows relative
+      to its aligned sources (an index join of two frames, or a window
+      over one): the mid survives only when every source carries the
+      same mid flavor, and the rows count as reordered;
+    - :meth:`_mint_rows` — a verb that emits a fresh provisional rowid
+      (merge, reset_index, melt, ``concat(ignore_index=True)``, ...).
+
+    A row position becomes visible through one path,
+    :meth:`_positioned`: ``iat``, ``iloc`` slices and lists, ``tail``,
+    the positional paste-join and :meth:`_densify` all call it.
+    """
+
     ndim: int
 
-    #: True when __idx_0 holds a *provisional* rowid — a
-    #: monotonically_increasing_id captured at scan time (unique,
-    #: order-correlated, NOT contiguous).  The contiguous 0-based values
-    #: the reference synthesizes eagerly (row_number() OVER () - 1,
-    #: alchemy.py:332-334) are only produced when index *values* become
-    #: observable: export, positional ops, or alignment against a
-    #: value-indexed frame.  This keeps a plain scan->project->agg
-    #: pipeline completely free of rowid jobs — the 100 TB-relevant
-    #: property (no count pass, no broadcast join under every query).
     _mid_index = False
-
-    #: True when the user imposed a row order (sort_values/sort_index/
-    #: nlargest, or a non-default index on ingest): export then follows
-    #: PLAN order.  False (default) means row order IS index order, so
-    #: export re-sorts client-side by the index — this makes the
-    #: materialized order immune to plan-level reordering (window
-    #: partitionBy, join shuffles), which the reference never faced
-    #: because its RDBMS never reordered single-table scans
-    #: (SURVEY.md §2.6 "no ORDER BY is ever emitted").
-    _explicit_order = False
-
-    #: True when a verb may have reordered rows in the PLAN relative to
-    #: the positional index (window evaluation sorts by value/key,
-    #: joins shuffle).  Export already re-sorts positional frames
-    #: client-side (_fetch_pandas); positional ACCESSORS (head/tail/
-    #: iloc/iat) consult this flag to re-sort plan-side first, so they
-    #: return the same rows the export shows.  Kept False on the plain
-    #: scan->project->filter path so head() stays an early-exit LIMIT
-    #: (no full-scan TakeOrdered under every repr).
-    _rows_reordered = False
-
-    #: True when the provisional mid-index holds TRUE file positions
-    #: (parquet _metadata.row_index on a single-file scan) rather than
-    #: arbitrary monotonic ids.  Then no densify pass is ever needed
-    #: (the mid IS the pandas RangeIndex), and export keeps the raw
-    #: values — after a filter that yields pandas' sparse original
-    #: labels exactly, where ranked monotonic mids would renumber.
     _mid_dense = False
-
-    #: Identity token for NON-dense mids: monotonically_increasing_id
-    #: encodes partition layout, so raw values are only comparable
-    #: between frames whose mids were minted by the SAME scan (file
-    #: scans are deterministically partitioned within a session, so a
-    #: file-set key works across re-reads of the same path).  Frames
-    #: derived from one another share the token via _shallow_copy.
-    #: ``None`` means "never directly comparable" — alignment densifies.
     _mid_origin = None
+    _explicit_order = False
+    _rows_reordered = False
 
     def __init__(self, index: pd.Index, columns: pd.Index | None, sdf: SparkDF):
         # index: pd.Index of *level names* (values live in the plan),
@@ -157,17 +166,48 @@ class BaseFrame:
         sel += [e.alias(I.col_name(i)) for i, e in enumerate(data_exprs)]
         return self._sdf.select(*sel)
 
-    # -- rowid -------------------------------------------------------------
+    # -- row-position state (see the class docstring) ---------------------
 
-    def _add_rowid(self, sdf: SparkDF, name: str = I.ROWID) -> SparkDF:
-        """Positional rowid for paste-joins (reference base.py:58-62) —
-        scalable partition-offset variant, not a global window."""
-        return with_rowid(sdf, name)
+    def _derive_rows(self, src: "BaseFrame") -> "BaseFrame":
+        """A row-preserving verb: take all five row-state flags from
+        ``src``.  Returns self."""
+        self._mid_index = src._mid_index
+        self._mid_dense = src._mid_dense
+        self._mid_origin = src._mid_origin
+        self._explicit_order = src._explicit_order
+        self._rows_reordered = src._rows_reordered
+        return self
+
+    def _merge_rows(self, *srcs: "BaseFrame") -> "BaseFrame":
+        """A verb whose plan may reorder rows relative to ``srcs`` (an
+        index join of aligned frames, or a window over one).  The
+        result's index holds raw mids only when every source does —
+        ``_mids_aligned`` made sure those are then all dense, or all
+        monotonic of one origin.  ``_explicit_order`` is left as is.
+        Returns self."""
+        mid = all(s._mid_index for s in srcs)
+        dense = all(s._mid_dense for s in srcs)
+        self._mid_index = mid
+        self._mid_dense = dense
+        self._mid_origin = srcs[0]._mid_origin if mid and not dense else None
+        self._rows_reordered = True
+        return self
+
+    def _mint_rows(self, dense: bool = False, origin=None) -> "BaseFrame":
+        """``__idx_0`` was just filled with a provisional rowid: true
+        file positions when ``dense``, else a monotonic id comparable
+        only with frames of the same ``origin`` (default: a fresh token,
+        comparable with no other frame).  Returns self."""
+        self._mid_index = True
+        self._mid_dense = dense
+        self._mid_origin = None if dense else (
+            object() if origin is None else origin)
+        return self
 
     def _densify(self) -> None:
         """Replace a provisional mid-index with contiguous 0-based
-        rowids in current physical order (one O(#partitions) count
-        pass).  Mirrors the reference's on-demand rowid re-synthesis
+        rowids: each row's position from :meth:`_positioned` becomes
+        its label.  Mirrors the reference's on-demand rowid re-synthesis
         (base.py:58-62).  In place; no-op when already dense.
 
         A ``_mid_dense`` mid already HOLDS the true positional labels
@@ -176,13 +216,12 @@ class BaseFrame:
         labels."""
         if not self._mid_index:
             return
-        if self._mid_dense:
-            self._mid_index = False
-            return
-        body = self._sdf.drop(I.idx_name(0))
-        rid = with_rowid(body, I.idx_name(0))
-        order = [I.idx_name(0)] + [c for c in body.columns]
-        self._sdf = rid.select(*order)
+        if not self._mid_dense:
+            pos, _ = self._positioned()
+            body = [c for c in self._sdf.columns if c != I.idx_name(0)]
+            self._sdf = pos._sdf.select(
+                F.col(I.ROWID).alias(I.idx_name(0)), *body)
+            self._rows_reordered = pos._rows_reordered
         self._mid_index = False
 
     def _densified(self) -> "BaseFrame":
@@ -191,6 +230,46 @@ class BaseFrame:
         new = self._shallow_copy()
         new._densify()
         return new
+
+    def _positioned(self) -> tuple["BaseFrame", int]:
+        """The one way a row position becomes visible.  Returns a copy
+        whose plan carries each row's 0-based position in column
+        ``I.ROWID``, and the row count, both from one per-partition
+        count pass (operators/rowid.py).  Positions follow index order:
+        a reordered plan is re-sorted by the index first.
+
+        A mid index is resolved on the way when plan order is index
+        order: a dense mid is a flag flip, a non-dense mid simply
+        becomes the rowid itself.  A non-dense mid under a user sort
+        (``_explicit_order``) stays raw, so export still ranks it back
+        to the original labels."""
+        new = self._shallow_copy()
+        if self._positional_reordered():
+            new._sdf = new._sdf.orderBy(F.col(I.idx_name(0)).asc())
+            new._rows_reordered = False
+        new._sdf, n = with_rowid(new._sdf, I.ROWID)
+        if new._mid_index and not new._mid_dense and not new._explicit_order:
+            new._sdf = new._sdf.withColumn(I.idx_name(0), F.col(I.ROWID))
+            new._mid_index = False
+        elif new._mid_dense:
+            new._mid_index = False
+        return new, n
+
+    def _value_at(self, row: int, col: int):
+        """Scalar at position (row, data column ``col``) — ``iat`` for
+        both frames and series (reference alchemy.py:146-163,374-383):
+        a rowid equality filter + take(1) rather than LIMIT/OFFSET.
+        The reference's off-by-one (``row > row_count``) is fixed to
+        ``>=`` (SURVEY.md §2.6); the IndexError names the position as
+        given, like pandas."""
+        pos, n = self._positioned()
+        at = wrap(row, n)
+        if at < 0 or at >= n:
+            raise IndexError(f"index {row} is out of bounds for "
+                             f"axis 0 with size {n}")
+        rows = pos._sdf.filter(F.col(I.ROWID) == at) \
+            .select(I.col_name(col)).take(1)
+        return rows[0][0]
 
     def _mids_aligned(self, other: "BaseFrame"):
         """Make two frames' indexes label-comparable for an
@@ -208,21 +287,19 @@ class BaseFrame:
         if not a and not b:
             return self, other
         if a and b:
-            if self._mid_dense and getattr(other, "_mid_dense", False):
+            if self._mid_dense and other._mid_dense:
                 return self, other
-            if (not self._mid_dense
-                    and not getattr(other, "_mid_dense", False)
+            if (not self._mid_dense and not other._mid_dense
                     and self._mid_origin is not None
-                    and self._mid_origin == getattr(other, "_mid_origin",
-                                                    None)):
+                    and self._mid_origin == other._mid_origin):
                 return self, other
         return self._densified(), other._densified()
 
     def _align_mids_with(self, other: "BaseFrame") -> "BaseFrame":
         """In-place twin of ``_mids_aligned`` for callers that mutate a
         copied self: densify SELF when the pair requires it and return
-        the (possibly densified) other, so the caller's post-join flag
-        bookkeeping reads post-alignment state."""
+        the (possibly densified) other, so the caller's ``_merge_rows``
+        reads post-alignment state."""
         a, b = self._mids_aligned(other)
         if a is not self:
             self._densify()
@@ -340,20 +417,14 @@ class BaseFrame:
             return j, mcol, scol, idx, names
         return self._join_idx_level(other, swapped=False)
 
-    def _paste_join(self, other_sdf: SparkDF, n_other_cols: int,
-                    other_rowid: str | None = None):
-        """Positional alignment (reference base.py:118-128): rowid both
-        sides, INNER JOIN on rowid.  Self's rowid comes from the
-        scalable partition-offset pass (operators/rowid.py); the other
-        side reuses its enumerated index column when it has one (the
-        reference does the same: from_list's rowid is passed in as
-        ``other_rowid``, alchemy.py:231-232)."""
-        l = self._add_rowid(self._sdf, I.ROWID)
-        l = self._rename_all(l, "l_")
-        if other_rowid is None:
-            r = with_rowid(other_sdf, I.ROWID)
-        else:
-            r = other_sdf.withColumn(I.ROWID, F.col(other_rowid).cast("long"))
+    def _paste_join(self, other_sdf: SparkDF, other_rowid: str):
+        """Positional alignment (reference base.py:118-128): INNER JOIN
+        on rowid.  Self must come from :meth:`_positioned` (its rowid
+        column is ``I.ROWID``); the other side reuses its enumerated
+        index column ``other_rowid`` (the reference does the same:
+        from_list's rowid is passed in, alchemy.py:231-232)."""
+        l = self._rename_all(self._sdf, "l_")
+        r = other_sdf.withColumn(I.ROWID, F.col(other_rowid).cast("long"))
         r = self._rename_all(r, "r_")
         joined = l.join(r, l[f"l_{I.ROWID}"] == r[f"r_{I.ROWID}"], "inner")
         idx = [joined[f"l_{I.idx_name(i)}"] for i in range(self._n_idx())]

@@ -33,7 +33,6 @@ from . import base, generic, internal as I, ops_mixin, utils
 from .functions import coercion
 from .indexer import (_AtIndexer, _iAtIndexer, _iLocIndexer,
                       _LocIndexer)
-from .operators.rowid import with_rowid
 from .relational import (RelationalMixin, ReshapeMixin,
                          SeriesAggMixin, SeriesRelationalMixin)
 from .session import get_session
@@ -197,12 +196,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             self._col_at(i).alias(I.col_name(0)))
         s = Series(self._index, pd.Index([name]), sdf, name,
                    lineage=(self._sdf, self._col_at(i)))
-        s._mid_index = self._mid_index
-        s._mid_dense = self._mid_dense
-        s._mid_origin = self._mid_origin
-        s._rows_reordered = self._rows_reordered
-        s._explicit_order = self._explicit_order
-        return s
+        return s._derive_rows(self)
 
     def __getitem__(self, key):
         # label -> Series; list of labels -> projection; boolean Series
@@ -215,15 +209,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             sdf = self._sdf.select(
                 *[F.col(I.idx_name(k)) for k in range(self._n_idx())],
                 *[self._col_at(p).alias(I.col_name(j)) for j, p in enumerate(positions)])
-            out = DataFrame(self._index, pd.Index(key), sdf)
-            out._mid_index = self._mid_index
-            out._mid_dense = self._mid_dense
-            out._mid_origin = self._mid_origin
-            out._rows_reordered = self._rows_reordered
-            # a projection never reorders rows: a sorted frame stays
-            # sorted through df[cols] (and through drop(columns=))
-            out._explicit_order = self._explicit_order
-            return out
+            return DataFrame(self._index, pd.Index(key), sdf)._derive_rows(self)
         return self._seq_at(self._columns.get_loc(key))
 
     def __setitem__(self, key, value):
@@ -292,27 +278,16 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         return _LocIndexer(self)
 
     def _get_value(self, index, col, takeable=False):
-        """Scalar at (row, col) (reference alchemy.py:146-163) — rowid
-        filter + take(1) rather than LIMIT/OFFSET."""
+        """Scalar at (row, col) (reference alchemy.py:146-163)."""
         if not takeable:
             raise NotImplementedError
-        col = utils.wrap(col, self._n_cols())
-        if col < 0 or col >= self._n_cols():
+        at = utils.wrap(col, self._n_cols())
+        if at < 0 or at >= self._n_cols():
             # pandas 1.2.3 says axis 0 here; kept for exception parity
             # (reference alchemy.py:149-155).
             raise IndexError(f"index {col} is out of bounds for "
                              f"axis 0 with size {self._n_cols()}")
-        row_count = len(self)
-        index = utils.wrap(index, row_count)
-        if index < 0 or index >= row_count:
-            raise IndexError(f"index {index} is out of bounds for "
-                             f"axis 0 with size {row_count}")
-        body = self._sdf
-        if self._positional_reordered():
-            body = body.orderBy(F.col(I.idx_name(0)).asc())
-        rid = with_rowid(body, I.ROWID)
-        rows = rid.filter(F.col(I.ROWID) == index).select(I.col_name(col)).take(1)
-        return rows[0][0]
+        return self._value_at(index, at)
 
     # -- the broadcast dispatch (9 rules) ---------------------------------
 
@@ -377,10 +352,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                     for i in range(self._n_cols())]
             self._sdf = base.BaseFrame(idx_names, self._columns, joined)._project(idx, cols)
             self._index = idx_names
-            self._mid_index = self._mid_index and other._mid_index
-            self._mid_dense = self._mid_dense and getattr(
-                other, "_mid_dense", False)
-            self._rows_reordered = True
+            self._merge_rows(self, other)
             return
 
         # rule 4: DataFrame operand -> align columns and rows
@@ -401,10 +373,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             self._sdf = base.BaseFrame(idx_names, joined_labels, joined)._project(idx, cols)
             self._index = idx_names
             self._columns = joined_labels
-            self._mid_index = self._mid_index and other._mid_index
-            self._mid_dense = self._mid_dense and getattr(
-                other, "_mid_dense", False)
-            self._rows_reordered = True
+            self._merge_rows(self, other)
             return
 
         # rules 5-6: plain list-likes
@@ -423,20 +392,19 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                 self._sdf = self._project(self._idx_cols(), cols)
                 return
             # rule 6: positional paste-join (reference alchemy.py:224-234);
-            # the len() here is the same count round trip the reference
-            # makes — required for the error contract.
-            num_rows = len(self)
+            # the row count for the error contract comes from the same
+            # pass that numbers the rows
+            this, num_rows = self._positioned()
             if len(other) != num_rows:
                 raise ValueError(f"Unable to coerce to Series, length "
                                  f"must be {num_rows}: given {len(other)}")
-            other_sdf = _list_to_sdf(other)
-            joined, lcol, rcol, idx = self._paste_join(
-                other_sdf, 1, other_rowid=I.idx_name(0))
+            joined, lcol, rcol, idx = this._paste_join(
+                _list_to_sdf(other), I.idx_name(0))
             cols = [app_op(lcol(i), rcol(0), _is_bool_dtype(dtypes[i]),
                            all(isinstance(v, bool) for v in other))
                     for i in range(self._n_cols())]
             self._sdf = base.BaseFrame(self._index, self._columns, joined)._project(idx, cols)
-            self._rows_reordered = True
+            self._merge_rows(this)
             return
 
         # rule 9 (reference alchemy.py:235-236)
@@ -531,12 +499,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                 yield res
 
         body = named.mapInPandas(run, out_schema)
-        out = Series(self._index, None, body, None)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return Series(self._index, None, body, None)._merge_rows(self)
 
     def interpolate(self, method: str = "linear", limit=None,
                     limit_direction=None):
@@ -570,12 +533,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             *[F.col(out_names.get(I.col_name(i), I.col_name(i)))
               .alias(I.col_name(i))
               for i in range(self._n_cols())])
-        out = DataFrame(self._index, self._columns, final)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return DataFrame(self._index, self._columns, final)._merge_rows(self)
 
     # -- frame-level global scans (one fused pass for all columns) ---------
 
@@ -599,12 +557,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             *[F.col(out_names.get(I.col_name(i), I.col_name(i)))
               .alias(I.col_name(i))
               for i in range(self._n_cols())])
-        out = DataFrame(self._index, self._columns, final)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return DataFrame(self._index, self._columns, final)._merge_rows(self)
 
     def _require_numeric(self, verb):
         bad = [str(self._columns[i]) for i, t in enumerate(self._dtypes())
@@ -770,9 +723,6 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                     "elementwise Python use applymap")
             cols.append(res._lineage_expr)
         idx = [self._idx_at(i) for i in range(self._n_idx())]
-        # _shallow_copy keeps every order/mid flag (a hand-built
-        # DataFrame here silently dropped _explicit_order and
-        # _rows_reordered, un-sorting sorted inputs on export)
         out = self._shallow_copy()
         out._sdf = self._project(idx, cols)
         if hasattr(out, "_drop_lineage"):
@@ -847,10 +797,8 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         root = mask._lineage_root
         if root is not None and root is self._sdf:
             cond = mask._lineage_expr
-            out = DataFrame(self._index, self._columns, self._sdf.filter(cond))
-            out._mid_index = self._mid_index
-            out._mid_dense = self._mid_dense
-            out._mid_origin = self._mid_origin
+            out = DataFrame(self._index, self._columns,
+                            self._sdf.filter(cond))._derive_rows(self)
             # a window-backed mask expression evaluates the window in
             # this plan -> rows come out in window order
             out._rows_reordered = (self._rows_reordered
@@ -874,13 +822,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             F.col(f"m_{I.col_name(0)}"))
         out = DataFrame(this._index, this._columns,
                         joined.select(this._sdf.columns))
-        out._mid_index = this._mid_index and mask._mid_index
-        out._mid_dense = (getattr(this, "_mid_dense", False)
-                          and getattr(mask, "_mid_dense", False))
-        if out._mid_index and not out._mid_dense:
-            out._mid_origin = this._mid_origin
-        out._rows_reordered = True
-        return out
+        return out._merge_rows(this, mask)
 
     def assign(self, **kwargs) -> "DataFrame":
         """Append computed columns (beyond reference; standard pandas
@@ -910,10 +852,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                 labels.append(name)
                 exprs.append(expr)
         sdf = self._project(self._idx_cols(), exprs)
-        out = DataFrame(self._index, pd.Index(labels), sdf)
-        out._mid_index = self._mid_index
-        out._mid_dense = self._mid_dense
-        out._mid_origin = self._mid_origin
+        out = DataFrame(self._index, pd.Index(labels), sdf)._derive_rows(self)
         # a window-backed Series value (rank/cumsum/...) makes the
         # projected plan evaluate that window -> rows come out in
         # window order, not index order
@@ -951,13 +890,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                for i in range(this._n_idx())]
         sel += [e.alias(I.col_name(j)) for j, e in enumerate(exprs)]
         out = DataFrame(this._index, pd.Index(labels), joined.select(*sel))
-        out._mid_index = this._mid_index and val._mid_index
-        out._mid_dense = (getattr(this, "_mid_dense", False)
-                          and getattr(val, "_mid_dense", False))
-        if out._mid_index and not out._mid_dense:
-            out._mid_origin = this._mid_origin
-        out._rows_reordered = True
-        return out
+        return out._merge_rows(this, val)
 
     # -- materialization ---------------------------------------------------
 
@@ -1039,6 +972,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         (shared by from_table and the sources.io readers)."""
         cols = list(sdf.columns)
         mid = dense = False
+        origin = None
         if index is None:
             # provisional rowid, densified to the reference's 0-based
             # contiguous form only when index values become observable
@@ -1079,10 +1013,9 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             mid = True
             # monotonic mids are comparable between frames of the same
             # file set (deterministic scan partitioning within a
-            # session); unknown inputs get a unique token so only
-            # frames DERIVED from this one (sharing it via
-            # _shallow_copy) join on raw mids
-            origin = ("scan",) + tuple(files) if files else object()
+            # session); unknown inputs get a fresh token, so only
+            # frames DERIVED from this one join on raw mids
+            origin = ("scan",) + tuple(files) if files else None
         else:
             if not pd.api.types.is_list_like(index):
                 index = (index,)
@@ -1099,11 +1032,7 @@ class DataFrame(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         sel = [e.alias(I.idx_name(i)) for i, e in enumerate(idx_exprs)]
         sel += [F.col(c).alias(I.col_name(i)) for i, c in enumerate(columns)]
         out = DataFrame(index, columns, sdf.select(*sel))
-        out._mid_index = mid
-        out._mid_dense = dense
-        if mid and not dense:
-            out._mid_origin = origin
-        return out
+        return out._mint_rows(dense, origin) if mid else out
 
 
 def _concat_columns(objs):
@@ -1121,17 +1050,7 @@ def _concat_columns(objs):
         exprs = [lcol(i) for i in range(len(this._columns))]
         exprs += [rcol(i) for i in range(len(o._columns))]
         sdf = base.BaseFrame(idx_names, None, joined)._project(idx, exprs)
-        nxt = DataFrame(this._index, pd.Index(labels), sdf)
-        # mids survive only when the pair joined on raw mids (same
-        # origin / both dense) — otherwise the index now holds real
-        # labels and the default flags are right
-        nxt._mid_index = this._mid_index and o._mid_index
-        nxt._mid_dense = (getattr(this, "_mid_dense", False)
-                          and getattr(o, "_mid_dense", False))
-        if nxt._mid_index and not nxt._mid_dense:
-            nxt._mid_origin = this._mid_origin
-        nxt._rows_reordered = True
-        out = nxt
+        out = DataFrame(this._index, pd.Index(labels), sdf)._merge_rows(this, o)
     return out
 
 
@@ -1160,7 +1079,7 @@ def concat(objs, axis=0, ignore_index: bool = False):
         for lab in o._columns:
             if lab not in labels:
                 labels.append(lab)
-    any_mid = any(getattr(o, "_mid_index", False) for o in objs)
+    any_mid = any(o._mid_index for o in objs)
     if any_mid and not ignore_index:
         # pandas keeps each part's own labels (0..n-1, 0..m-1, ...) in
         # part order.  Materialize them per part BEFORE the union
@@ -1190,9 +1109,7 @@ def concat(objs, axis=0, ignore_index: bool = False):
         body = body.select(
             F.monotonically_increasing_id().alias(I.idx_name(0)),
             *[I.col_name(j) for j in range(len(labels))])
-        out = DataFrame(pd.Index((None,)), pd.Index(labels), body)
-        out._mid_index = True
-        out._mid_origin = object()
+        out = DataFrame(pd.Index((None,)), pd.Index(labels), body)._mint_rows()
     elif any_mid:
         # parts were densified above: index values are true per-part
         # positions (duplicated across parts), and pandas row order is
@@ -1261,12 +1178,7 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
     def to_frame(self, name=None):
         """1-column DataFrame from this Series (plan unchanged)."""
         label = name if name is not None else (self.name or 0)
-        out = DataFrame(self._index, pd.Index([label]), self._sdf)
-        out._mid_index = self._mid_index
-        out._mid_dense = self._mid_dense
-        out._mid_origin = self._mid_origin
-        out._rows_reordered = self._rows_reordered
-        return out
+        return DataFrame(self._index, pd.Index([label]), self._sdf)._derive_rows(self)
 
     def _zip_with(self, other, fn):
         """Align with another Series and apply a binary column
@@ -1285,13 +1197,12 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                 expr.alias(I.col_name(0)))
             new._lineage = (root, expr)
             return new
-        joined, lcol, rcol, idx, idx_names = new._join_idx(other)
+        this, other = new._mids_aligned(other)
+        joined, lcol, rcol, idx, idx_names = this._join_idx(other)
         new._sdf = base.BaseFrame(idx_names, None, joined)._project(
             idx, [fn(lcol(0), rcol(0))])
         new._lineage = None
-        new._mid_index = False
-        new._rows_reordered = True
-        return new
+        return new._merge_rows(this, other)
 
     def where(self, cond, other=None):
         """pandas Series.where: keep values where ``cond`` is True,
@@ -1332,10 +1243,7 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             expr.alias(I.col_name(0)))
         out = Series(self._index, None, body, self.name,
                      lineage=(root, expr))
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        return out
+        return out._derive_rows(self)
 
     def combine_first(self, other):
         """pandas combine_first: self's values, with holes filled from
@@ -1541,21 +1449,10 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
         return _LocIndexer(self)
 
     def _get_value(self, label, takeable=False):
-        # reference alchemy.py:374-383; note the reference's off-by-one
-        # (`label > row_count`) is fixed to `>=` per SURVEY.md §2.6.
+        # reference alchemy.py:374-383
         if not takeable:
             raise NotImplementedError
-        row_count = len(self)
-        label = utils.wrap(label, row_count)
-        if label < 0 or label >= row_count:
-            raise IndexError(f"index {label} is out of bounds for "
-                             f"axis 0 with size {row_count}")
-        body = self._sdf
-        if self._positional_reordered():
-            body = body.orderBy(F.col(I.idx_name(0)).asc())
-        rid = with_rowid(body, I.ROWID)
-        rows = rid.filter(F.col(I.ROWID) == label).select(I.col_name(0)).take(1)
-        return rows[0][0]
+        return self._value_at(label, 0)
 
     # -- broadcast dispatch ------------------------------------------------
 
@@ -1624,10 +1521,7 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
             self._sdf = base.BaseFrame(idx_names, None, joined)._project(idx, [col])
             self._index = idx_names
             self._lineage = None
-            self._mid_index = self._mid_index and other._mid_index
-            self._mid_dense = self._mid_dense and getattr(
-                other, "_mid_dense", False)
-            self._rows_reordered = True
+            self._merge_rows(self, other)
             self.name = self.name if self.name == other.name else None
             return
 
@@ -1649,7 +1543,7 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                 return self._op(op, other[0], level=level,
                                 fill_value=fill_value, axis=axis,
                                 reverse=reverse, lax=lax)
-            row_count = len(self)
+            this, row_count = self._positioned()
             if len(other) != row_count:
                 if reverse:
                     lhs, rhs = len(other), row_count
@@ -1657,14 +1551,13 @@ class Series(base.BaseFrame, generic.GenericMixin, ops_mixin.OpsMixin,
                     lhs, rhs = row_count, len(other)
                 raise ValueError(f"operands could not be broadcast together "
                                  f"with shapes ({lhs},) ({rhs},)")
-            other_sdf = _list_to_sdf(other)
-            joined, lcol, rcol, idx = self._paste_join(
-                other_sdf, 1, other_rowid=I.idx_name(0))
+            joined, lcol, rcol, idx = this._paste_join(
+                _list_to_sdf(other), I.idx_name(0))
             col = app_op(lcol(0), rcol(0), my_bool,
                          all(isinstance(v, bool) for v in other))
             self._sdf = base.BaseFrame(self._index, None, joined)._project(idx, [col])
             self._lineage = None
-            self._rows_reordered = True
+            self._merge_rows(this)
             return
 
         raise TypeError(f"Cannot broadcast np.ndarray with "

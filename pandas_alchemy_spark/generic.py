@@ -47,8 +47,7 @@ class GenericMixin:
             idx.names = list(self._index)
             return idx
         values = pdf.iloc[:, 0]
-        if (getattr(self, "_mid_index", False)
-                and not getattr(self, "_mid_dense", False)):
+        if self._mid_index and not self._mid_dense:
             values = values.rank(method="first").astype("int64") - 1
         idx = pd.Index(values)
         idx.name = self._index[0]
@@ -103,29 +102,16 @@ class GenericMixin:
         positions) do it in ONE pass: top-n by rowid descending
         compiles to TakeOrderedAndProject, and export re-sorts
         ascending client-side — no count job at all.  Other frames
-        keep the count + rowid-predicate form."""
-        if (getattr(self, "_mid_dense", False)
-                and not self._explicit_order):
+        filter on the row position, whose pass also counts the rows."""
+        if self._mid_dense and not self._explicit_order:
             self._sdf = self._sdf.orderBy(
                 F.col(I.idx_name(0)).desc()).limit(n)
             self._rows_reordered = True  # plan is desc; export resorts
-            self._drop_lineage()
-            return
-        if self._positional_reordered():
-            # rowids below must be assigned in INDEX order, not the
-            # reordered plan order
-            self._sdf = self._sdf.orderBy(F.col(I.idx_name(0)).asc())
-            self._rows_reordered = False
-        if getattr(self, "_mid_index", False):
-            # positional parity: tail keeps the original index values
-            self._densify()
-        total = self._sdf.count()
-        skip = max(0, total - n)
-        if skip == 0:
-            return
-        from .operators.rowid import with_rowid
-        rid = with_rowid(self._sdf, I.ROWID)
-        self._sdf = rid.filter(F.col(I.ROWID) >= skip).drop(I.ROWID)
+        else:
+            pos, total = self._positioned()
+            self._sdf = pos._sdf.filter(F.col(I.ROWID) >= total - n) \
+                .drop(I.ROWID)
+            self._derive_rows(pos)
         self._drop_lineage()
 
     # -- per-column appliers ----------------------------------------------

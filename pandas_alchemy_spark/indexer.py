@@ -1,9 +1,9 @@
 """Indexers: ``.iat`` (reference pandas_alchemy/indexer.py:1-21) plus
 beyond-reference ``.loc`` / ``.iloc``.
 
-``.iloc[slice]`` is a rowid range filter — on a positional frame the
-predicate lands on the synthesized rowid, one narrow pass, no
-collect.  ``.loc`` supports boolean-mask rows (in-plan filter) and
+``.iloc[slice]`` is a rowid range filter — the predicate lands on the
+synthesized rowid (one per-partition count collect, no shuffle of the
+rows).  ``.loc`` supports boolean-mask rows (in-plan filter) and
 label rows (index equality filter), each optionally with a column
 list / single column."""
 
@@ -31,96 +31,60 @@ class _iLocIndexer:
             key = slice(key, key + 1 if key != -1 else None)
         if isinstance(key, list):
             out = self._take_rows(key)
-            if cols is not None and obj.ndim == 2:
-                if isinstance(cols, int):
-                    out = out._seq_at(cols)
-                elif isinstance(cols, slice):
-                    out = out[list(obj._columns[cols])]
-                else:
-                    out = out[[obj._columns[c] if isinstance(c, int)
-                               else c for c in cols]]
-            return out
-        if not isinstance(key, slice):
+        elif not isinstance(key, slice):
             raise NotImplementedError(
                 "iloc supports integers, slices and lists")
-        if key.step is not None and key.step < 1:
+        elif key.step is not None and key.step < 1:
             # a negative step REVERSES row order, which conflicts with
             # the positional export contract (row order is index
             # order); reverse client-side after to_pandas instead
             raise NotImplementedError("iloc slice with negative step")
-        out = self._slice_rows(key)
+        else:
+            out = self._slice_rows(key)
         if cols is not None and obj.ndim == 2:
-            if isinstance(cols, int):
-                out = out._seq_at(cols)
-            elif isinstance(cols, slice):
-                out = out[list(obj._columns[cols])]
-            else:
-                out = out[[obj._columns[c] if isinstance(c, int) else c
-                           for c in cols]]
+            out = self._select_cols(out, cols)
         return out
+
+    def _select_cols(self, out, cols):
+        obj = self._obj
+        if isinstance(cols, int):
+            return out._seq_at(cols)
+        if isinstance(cols, slice):
+            return out[list(obj._columns[cols])]
+        return out[[obj._columns[c] if isinstance(c, int) else c
+                    for c in cols]]
+
+    def _filter_positions(self, cond_of):
+        """Rows whose 0-based position satisfies ``cond_of(rowid, n)``,
+        positions from the frame's one positional pass
+        (base.BaseFrame._positioned)."""
+        new, n = self._obj._positioned()
+        new._sdf = new._sdf.filter(cond_of(F.col(I.ROWID), n)) \
+            .drop(I.ROWID)
+        new._drop_lineage()
+        return new
 
     def _take_rows(self, positions: list):
         """``iloc[[i, j, ...]]`` / ``take`` — a rowid IN filter (one
         membership predicate, no shuffle).  Rows come back in INDEX
         order, not list order (the engine's standing row-order
         contract); negative positions count from the end."""
-        from .operators.rowid import with_rowid
-        obj = self._obj
         if not all(isinstance(p, int) for p in positions):
             raise TypeError("iloc list entries must be integers")
-        if any(p < 0 for p in positions):
-            n = len(obj)
-            positions = [p + n if p < 0 else p for p in positions]
-        new = obj._shallow_copy()
-        if obj._positional_reordered():
-            new._sdf = new._sdf.orderBy(F.col(I.idx_name(0)).asc())
-            new._rows_reordered = False
-        if getattr(new, "_mid_index", False):
-            new._densify()
-        rid = with_rowid(new._sdf, I.ROWID)
-        new._sdf = rid.filter(
-            F.col(I.ROWID).isin([int(p) for p in positions])) \
-            .drop(I.ROWID)
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
-        return new
+        return self._filter_positions(lambda rid, n: rid.isin(
+            [p + n if p < 0 else p for p in positions]))
 
     def _slice_rows(self, sl: slice):
-        from .operators.rowid import with_rowid
-        obj = self._obj
-        start, stop = sl.start, sl.stop
-        if (start is not None and start < 0) or (stop is not None and stop < 0):
-            # negative bounds need the row count (same trade the
-            # reference makes for tail, generic.py:50-57)
-            n = len(obj)
-            start = None if start is None else max(0, start + n) if start < 0 else start
-            stop = None if stop is None else max(0, stop + n) if stop < 0 else stop
-        new = obj._shallow_copy()
-        if obj._positional_reordered():
-            # rowids must follow index order, not the reordered plan
-            new._sdf = new._sdf.orderBy(F.col(I.idx_name(0)).asc())
-            new._rows_reordered = False
-        if getattr(new, "_mid_index", False):
-            # pandas iloc keeps the original positional labels (e.g.
-            # iloc[10:15] shows index 10..14): densify BEFORE slicing
-            # so positions materialize as real index values instead of
-            # being re-ranked 0-based within the slice at export
-            new._densify()
-        rid = with_rowid(new._sdf, I.ROWID)
-        cond = None
-        if start:
-            cond = F.col(I.ROWID) >= start
-        if stop is not None:
-            c = F.col(I.ROWID) < stop
-            cond = c if cond is None else (cond & c)
-        if sl.step is not None and sl.step > 1:
-            c = F.pmod(F.col(I.ROWID) - F.lit(start or 0),
-                       F.lit(sl.step)) == 0
-            cond = c if cond is None else (cond & c)
-        new._sdf = rid.filter(cond).drop(I.ROWID) if cond is not None else new._sdf
-        if hasattr(new, "_drop_lineage"):
-            new._drop_lineage()
-        return new
+        """``iloc[start:stop:step]`` (step >= 1) — a rowid range filter.
+        Positions are taken AFTER densifying a mid index, so pandas'
+        positional labels survive (iloc[10:15] shows index 10..14)."""
+        def cond_of(rid, n):
+            start, stop, step = sl.indices(n)
+            cond = (rid >= start) & (rid < stop)
+            if step > 1:
+                cond = cond & (F.pmod(rid - F.lit(start), F.lit(step)) == 0)
+            return cond
+        return self._filter_positions(cond_of)
 
 
 class _LocIndexer:

@@ -382,11 +382,7 @@ class SeriesWindow(_WindowVerbs):
         body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
                           F.col("__out").alias(I.col_name(0)))
         res = Series(s._index, None, body, s.name)
-        res._mid_index = getattr(s, "_mid_index", False)
-        res._mid_dense = getattr(s, "_mid_dense", False)
-        res._mid_origin = getattr(s, "_mid_origin", None)
-        res._rows_reordered = True
-        return res
+        return res._merge_rows(s)
 
     def _cum_scan(self, op):
         from .segscan import cum_scan
@@ -477,11 +473,7 @@ class SeriesWindow(_WindowVerbs):
         body = out.select(F.col(I.idx_name(0)),
                           F.col("__out").alias(I.col_name(0)))
         res = Series(s._index, None, body, s.name)
-        res._mid_index = getattr(s, "_mid_index", False)
-        res._mid_dense = getattr(s, "_mid_dense", False)
-        res._mid_origin = getattr(s, "_mid_origin", None)
-        res._rows_reordered = True
-        return res
+        return res._merge_rows(s)
 
     def _window(self, *_):
         # every public global verb is overridden with a segmented
@@ -605,11 +597,7 @@ class SeriesGroupBy(_WindowVerbs):
         body = out.select(*[F.col(nm) for nm in idx_names],
                           F.col("__out").alias(I.col_name(0)))
         s = self._Series(df._index, None, body, self._label)
-        s._mid_index = getattr(df, "_mid_index", False)
-        s._mid_dense = getattr(df, "_mid_dense", False)
-        s._mid_origin = getattr(df, "_mid_origin", None)
-        s._rows_reordered = True
-        return s
+        return s._merge_rows(df)
 
     def _wrap(self, fn):
         df = self._df
@@ -625,11 +613,7 @@ class SeriesGroupBy(_WindowVerbs):
         body = df._sdf.select(*sel)
         out = self._Series(df._index, None, body, self._label,
                            lineage=(df._sdf, expr))
-        out._mid_index = getattr(df, "_mid_index", False)
-        out._mid_dense = getattr(df, "_mid_dense", False)
-        out._mid_origin = getattr(df, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return out._merge_rows(df)
 
     def ewm(self, alpha: float):
         """pandas ``groupby(k)[c].ewm(alpha).mean()`` — the JVM window
@@ -717,11 +701,7 @@ class _GroupedEwm:
         body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
                           F.col("__ewm").alias(I.col_name(0)))
         s = sgb._Series(df._index, None, body, sgb._label)
-        s._mid_index = getattr(df, "_mid_index", False)
-        s._mid_dense = getattr(df, "_mid_dense", False)
-        s._mid_origin = getattr(df, "_mid_origin", None)
-        s._rows_reordered = True
-        return s
+        return s._merge_rows(df)
 
     def mean(self, exact: bool = False):
         """Grouped EWM mean.  Default: the codegen'd window pow-trick
@@ -805,10 +785,7 @@ class Ewm:
         body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
                           F.col("__ewm").alias(I.col_name(0)))
         res = Series(s._index, None, body, s.name)
-        res._mid_index = getattr(s, "_mid_index", False)
-        res._mid_dense = getattr(s, "_mid_dense", False)
-        res._mid_origin = getattr(s, "_mid_origin", None)
-        return res
+        return res._merge_rows(s)
 
     def var(self, bias: bool = False):
         """pandas ``ewm(alpha).var(bias=)`` — the mean scan's
@@ -869,10 +846,7 @@ class Ewm:
         body = out.select(*[F.col(I.idx_name(i)) for i in range(n)],
                           F.col("__ewm").alias(I.col_name(0)))
         res = Series(s._index, None, body, s.name)
-        res._mid_index = getattr(s, "_mid_index", False)
-        res._mid_dense = getattr(s, "_mid_dense", False)
-        res._mid_origin = getattr(s, "_mid_origin", None)
-        return res
+        return res._merge_rows(s)
 
 
 _OFFSET_UNITS_US = {

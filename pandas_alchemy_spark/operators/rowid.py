@@ -6,65 +6,51 @@ joins (base.py:58-62).  A bare ``row_number() OVER ()`` in Spark is a
 single-partition window — every row funnels through one task, which is
 the canonical 100 TB scale hazard (SURVEY.md §4.2).
 
-We instead use the classic two-pass *partition-offset* trick:
+We instead use the classic two-pass *partition-offset* trick on
+``monotonically_increasing_id()``, which packs the partition index into
+its upper 31 bits and the row's position within that partition into the
+lower 33:
 
-  1. per-partition local ``row_number`` ordered by
-     ``monotonically_increasing_id()`` (preserves intra-partition order,
-     no shuffle);
-  2. a tiny per-partition count aggregate (`#partitions` rows) collected
-     to the driver, turned into cumulative offsets, and mapped back with
-     a broadcast join.
+  1. a per-partition row count, keyed by ``id >> 33``: one aggregate
+     whose result (``#partitions`` rows) is collected to the driver and
+     turned into cumulative offsets;
+  2. a broadcast join of those offsets back onto the rows, each rowid
+     being ``offset + (id & (2**33 - 1))``.
 
-Total cost: one narrow pass + one O(#partitions) aggregate.  No global
-shuffle, no single-task window, works identically on 1000 executors.
-
-When a caller *does* have a meaningful total order (an ``order_by``
-column list), we emit a global ``row_number`` over that order only if
-asked (deterministic semantics for tests); the scalable path is the
-default.
+Both passes read the frame in its current partition order; neither
+shuffles or sorts the frame's rows (the count aggregate shuffles one
+partial count per partition, and the offsets travel as a broadcast).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _PART = "__pa_part"
-_LOCAL = "__pa_local_rn"
 _OFFSET = "__pa_part_offset"
 
+#: monotonically_increasing_id keeps the within-partition row number in
+#: its low 33 bits and the partition index above them
+_LOCAL_BITS = 33
 
-def with_rowid(sdf: DataFrame, name: str, order_by: list | None = None) -> DataFrame:
-    """Attach a 0-based ``long`` rowid column called ``name``.
 
-    ``order_by=None`` -> scalable partition-offset rowid following
+def with_rowid(sdf: DataFrame, name: str) -> tuple[DataFrame, int]:
+    """Attach a 0-based ``long`` rowid column called ``name`` following
     current partition order (the analogue of the reference's
-    order-of-the-query rowid).  ``order_by=[cols]`` -> deterministic
-    global row_number over that order (single-partition window: only for
-    small/test frames or already-aggregated data).
-    """
-    if order_by:
-        w = Window.orderBy(*order_by)
-        return sdf.withColumn(name, F.row_number().over(w).cast("long") - 1)
-
-    part = sdf.withColumn(_PART, F.spark_partition_id()).withColumn(
-        _LOCAL,
-        F.row_number().over(
-            Window.partitionBy(_PART).orderBy(F.monotonically_increasing_id())
-        ),
-    )
-    # O(#partitions) rows: safe to collect on any cluster size.
-    counts = part.groupBy(_PART).count().collect()
-    offsets, acc = {}, 0
+    order-of-the-query rowid).  Returns the frame and its row count,
+    both from the one per-partition count collect."""
+    tagged = sdf.withColumn(name, F.monotonically_increasing_id()) \
+        .withColumn(_PART, F.shiftright(F.col(name), _LOCAL_BITS))
+    counts = tagged.groupBy(_PART).count().collect()
+    offsets, total = [], 0
     for row in sorted(counts, key=lambda r: r[_PART]):
-        offsets[row[_PART]] = acc
-        acc += row["count"]
-    spark = sdf.sparkSession
-    offset_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], f"{_PART} int, {_OFFSET} long"
-    )
-    return (
-        part.join(F.broadcast(offset_df), _PART)
-        .withColumn(name, (F.col(_LOCAL).cast("long") - 1 + F.col(_OFFSET)))
-        .drop(_PART, _LOCAL, _OFFSET)
-    )
+        offsets.append((int(row[_PART]), total))
+        total += row["count"]
+    offset_df = sdf.sparkSession.createDataFrame(
+        offsets, f"{_PART} long, {_OFFSET} long")
+    local = F.col(name).bitwiseAND(F.lit((1 << _LOCAL_BITS) - 1))
+    out = (tagged.join(F.broadcast(offset_df), _PART)
+           .withColumn(name, local + F.col(_OFFSET))
+           .drop(_PART, _OFFSET))
+    return out, total

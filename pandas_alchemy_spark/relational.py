@@ -161,9 +161,7 @@ class GroupBy:
                 for j, c in enumerate(out_labels)]
         res = DataFrame(pd.Index((None,)), pd.Index(out_labels),
                         out.select(*sel))
-        res._mid_index = True
-        res._mid_origin = object()
-        return res
+        return res._mint_rows()
 
     def filter(self, fn):
         """pandas groupby filter: keep the member ROWS of every group
@@ -207,11 +205,7 @@ class GroupBy:
         sel += [F.col(f"__d_{i}").alias(I.col_name(i))
                 for i in range(len(labels))]
         res = DataFrame(df._index, df._columns, out.select(*sel))
-        res._mid_index = getattr(df, "_mid_index", False)
-        res._mid_dense = getattr(df, "_mid_dense", False)
-        res._mid_origin = getattr(df, "_mid_origin", None)
-        res._rows_reordered = True
-        return res
+        return res._merge_rows(df)
 
     def _simple(self, fn):
         labels = [c for c in self._df._columns if c not in self._by]
@@ -330,11 +324,7 @@ class GroupBy:
             sel.append(expr.alias(I.col_name(j)))
         out = DataFrame(df._index, pd.Index(labels),
                         df._sdf.select(*sel))
-        out._mid_index = getattr(df, "_mid_index", False)
-        out._mid_dense = getattr(df, "_mid_dense", False)
-        out._mid_origin = getattr(df, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return out._merge_rows(df)
 
     def _transform_frame(self, verb, *args, **kw):
         return self._transform_frame_fn(
@@ -461,11 +451,7 @@ class GroupBy:
         sel.append((F.row_number().over(w) - F.lit(1))
                    .alias(I.col_name(0)))
         out = Series(df._index, None, df._sdf.select(*sel), None)
-        out._mid_index = getattr(df, "_mid_index", False)
-        out._mid_dense = getattr(df, "_mid_dense", False)
-        out._mid_origin = getattr(df, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return out._merge_rows(df)
 
     def ngroup(self):
         """Group number in sorted-key order (pandas sort=True
@@ -505,11 +491,7 @@ class GroupBy:
         out = (df._sdf.select(*sel).where(F.col("__keep"))
                .drop("__keep"))
         res = DataFrame(df._index, df._columns, out)
-        res._mid_index = getattr(df, "_mid_index", False)
-        res._mid_dense = getattr(df, "_mid_dense", False)
-        res._mid_origin = getattr(df, "_mid_origin", None)
-        res._rows_reordered = True
-        return res
+        return res._merge_rows(df)
 
     def head(self, n: int = 5):
         """First ``n`` member rows of every group (negative ``n``:
@@ -1047,11 +1029,7 @@ class RelationalMixin:
             sel += [l[f"l_{I.col_name(i)}"].alias(I.col_name(i))
                     for i in range(len(self._columns))]
             out = DataFrame(self._index, self._columns, joined.select(*sel))
-            out._mid_index = self._mid_index
-            out._mid_dense = getattr(self, "_mid_dense", False)
-            out._mid_origin = getattr(self, "_mid_origin", None)
-            out._rows_reordered = True
-            return out
+            return out._merge_rows(self)
         joined = l.crossJoin(r) if how == "cross" else l.join(r, cond, how)
         # result columns: left data cols + right data cols (minus
         # right-side join keys when joining `on` shared labels)
@@ -1092,9 +1070,7 @@ class RelationalMixin:
         sel += [e.alias(I.col_name(k)) for k, e in enumerate(out_exprs)]
         out = DataFrame(pd.Index((None,)), pd.Index(out_labels),
                         joined.select(*sel))
-        out._mid_index = True
-        out._mid_origin = object()
-        return out
+        return out._mint_rows()
 
     def join(self, other, how="left", lsuffix="", rsuffix=""):
         """pandas DataFrame.join: join on the INDEX (all levels,
@@ -1141,16 +1117,7 @@ class RelationalMixin:
         sel = [e.alias(I.idx_name(i)) for i, e in enumerate(idx)]
         sel += [e.alias(I.col_name(k)) for k, e in enumerate(exprs)]
         out = DataFrame(this._index, pd.Index(labels), joined.select(*sel))
-        # _mids_aligned guarantees: if either side is still mid-indexed
-        # here, BOTH are, same flavor (both dense, or same-origin
-        # monotonic) — the output index holds those mid values, so the
-        # flags/origin must ride along or raw mids leak as labels
-        out._mid_index = this._mid_index
-        out._mid_dense = getattr(this, "_mid_dense", False)
-        if out._mid_index and not out._mid_dense:
-            out._mid_origin = this._mid_origin
-        out._rows_reordered = True
-        return out
+        return out._merge_rows(this, oth)
 
     def explode(self, column):
         """pandas DataFrame.explode: unnest one array column, other
@@ -1331,10 +1298,7 @@ class RelationalMixin:
                 *[e.alias(I.col_name(i))
                   for i, e in enumerate(exprs)])
             out = DataFrame(self._index, pd.Index(out_labels), body)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        return out
+        return out._derive_rows(self)
 
     def nunique(self):
         """Distinct count per column -> pandas Series (one aggregate
@@ -1484,11 +1448,7 @@ class RelationalMixin:
         from .core import DataFrame
         out = DataFrame(self._index, self._columns,
                         new._sdf.select(*sel))
-        out._mid_index = getattr(new, "_mid_index", False)
-        out._mid_dense = getattr(new, "_mid_dense", False)
-        out._mid_origin = getattr(new, "_mid_origin", None)
-        out._rows_reordered = getattr(new, "_rows_reordered", False)
-        return out
+        return out._derive_rows(new)
 
     def pivot(self, index=None, columns=None, values=None):
         """pandas ``df.pivot``: reshape WITHOUT aggregation — raises
@@ -1613,10 +1573,7 @@ class RelationalMixin:
                for i in range(self._n_idx())]
         sel.append(expr.alias(I.col_name(0)))
         out = Series(self._index, None, self._sdf.select(*sel), None)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        return out
+        return out._derive_rows(self)
 
     def sum(self, axis=0, numeric_only=True):
         """Column sums (axis=0, a one-row aggregate) or row sums
@@ -1737,11 +1694,7 @@ class RelationalMixin:
         sel = [e.alias(I.idx_name(i)) for i, e in enumerate(idx)]
         sel.append(expr.alias(I.col_name(0)))
         out = Series(self._index, None, self._sdf.select(*sel), None)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return out._merge_rows(self)
 
     def drop_duplicates(self, subset=None):
         """Exact dedup.  With ``subset``, keeps one arbitrary row per
@@ -1753,9 +1706,7 @@ class RelationalMixin:
             sdf = sdf.select(F.monotonically_increasing_id().alias(I.idx_name(0)),
                              *[I.col_name(i) for i in range(self._n_cols())])
             out = DataFrame(pd.Index((None,)), self._columns, sdf)
-            out._mid_index = True
-            out._mid_origin = object()
-            return out
+            return out._mint_rows()
         keys = [self._col_at(self._columns.get_loc(s)).alias(f"__k_{j}")
                 for j, s in enumerate(subset)]
         others = F.struct(*self._idx_cols(), *self._data_cols()).alias("__all")
@@ -1894,9 +1845,7 @@ class RelationalMixin:
                 for i in range(self._n_cols())]
         out = DataFrame(pd.Index((None,)), pd.Index(idx_labels + list(self._columns)),
                         self._sdf.select(*sel))
-        out._mid_index = True
-        out._mid_origin = object()
-        return out
+        return out._mint_rows()
 
     # -- alignment-based frame verbs (pandas parity batch) -------------
 
@@ -2145,10 +2094,7 @@ class RelationalMixin:
             sel.append(expr.alias(I.col_name(j)))
         out = DataFrame(self._index, pd.Index(list(w.columns)),
                         self._sdf.select(*sel))
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        return out
+        return out._derive_rows(self)
 
     def align(self, other, join="outer"):
         """pandas ``df.align(other)``: both frames conformed onto the
@@ -2287,7 +2233,7 @@ class RelationalMixin:
               for i in range(self._n_cols())])
         out = DataFrame(pd.Index([self._index[k] for k in keep]),
                         self._columns, body)
-        out._rows_reordered = getattr(self, "_rows_reordered", False)
+        out._rows_reordered = self._rows_reordered
         return out
 
     def divide(self, other, fill_value=None):
@@ -2563,10 +2509,7 @@ def get_dummies(ser, prefix=None, categories=None, max_categories=64):
     idx = [ser._idx_at(i) for i in range(ser._n_idx())]
     data = [(ser._the_col == F.lit(v)).cast("int") for v in categories]
     out = DataFrame(ser._index, pd.Index(labels), ser._project(idx, data))
-    out._mid_index = ser._mid_index
-    out._mid_dense = getattr(ser, "_mid_dense", False)
-    out._mid_origin = getattr(ser, "_mid_origin", None)
-    return out
+    return out._derive_rows(ser)
 
 
 class ReshapeMixin:
@@ -2710,9 +2653,7 @@ class ReshapeMixin:
         sel += [F.col(c).alias(I.col_name(j)) for j, c in enumerate(labels)]
         from .core import DataFrame as DF
         out = DF(pd.Index((None,)), pd.Index(labels), un.select(*sel))
-        out._mid_index = True
-        out._mid_origin = object()
-        return out
+        return out._mint_rows()
 
     def describe(self, percentiles=(0.25, 0.5, 0.75)):
         """pandas describe() for numeric columns: ONE Spark aggregate
@@ -3089,11 +3030,7 @@ class SeriesRelationalMixin:
         sel.append(expr.alias(I.col_name(0)))
         out = Series(self._index, None, self._sdf.select(*sel),
                      self.name)
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        out._rows_reordered = True
-        return out
+        return out._merge_rows(self)
 
     def drop_duplicates(self, keep="first"):
         """Keep one occurrence per distinct value (first/last in index
@@ -3160,8 +3097,7 @@ class SeriesRelationalMixin:
                 expr.alias(I.idx_name(0)),
                 self._the_col.alias(I.col_name(0)))
             out = Series(self._index, None, body, self.name)
-            out._rows_reordered = getattr(self, "_rows_reordered",
-                                          False)
+            out._rows_reordered = self._rows_reordered
             return out
         new = self._shallow_copy()
         new.name = name
@@ -3360,7 +3296,7 @@ class SeriesRelationalMixin:
                          *[F.col(I.idx_name(i))
                            for i in range(self._n_idx())],
                          F.col(I.col_name(0))), self.name)
-        out._rows_reordered = getattr(self, "_rows_reordered", False)
+        out._rows_reordered = self._rows_reordered
         return out
 
     def filter(self, items=None, like=None, regex=None):
@@ -3496,8 +3432,7 @@ class SeriesRelationalMixin:
 
     def _arg_extreme_pos(self, first: bool):
         s = self.reset_index(drop=True)
-        if getattr(s, "_mid_index", False):
-            s._densify()
+        s._densify()
         return int(s.idxmin() if first else s.idxmax())
 
     def case_when(self, caselist):
@@ -3538,10 +3473,7 @@ class SeriesRelationalMixin:
             expr.alias(I.col_name(0)))
         out = Series(self._index, None, body, self.name,
                      lineage=(root, expr))
-        out._mid_index = getattr(self, "_mid_index", False)
-        out._mid_dense = getattr(self, "_mid_dense", False)
-        out._mid_origin = getattr(self, "_mid_origin", None)
-        return out
+        return out._derive_rows(self)
 
     def groupby(self, by=None, level=None):
         """``series.groupby(key_series)`` / ``groupby(level=i)`` — the
@@ -3584,9 +3516,7 @@ class SeriesRelationalMixin:
         if key == "__v":
             key = "__key"
         frame = DataFrame(self._index, pd.Index([key, "__v"]), body)
-        frame._mid_index = getattr(self, "_mid_index", False)
-        frame._mid_dense = getattr(self, "_mid_dense", False)
-        frame._mid_origin = getattr(self, "_mid_origin", None)
+        frame._derive_rows(self)
         return SeriesGroupBy(frame, [key], "__v")
 
     def unstack(self, level=-1, agg: str = "first",
@@ -3729,8 +3659,7 @@ class SeriesRelationalMixin:
                 f"Length mismatch: expected {n} labels, "
                 f"got {len(labels)}")
         flat = self.reset_index(drop=True)
-        if getattr(flat, "_mid_index", False):
-            flat._densify()
+        flat._densify()
         spark = self._sdf.sparkSession
         lit = spark.createDataFrame(
             pd.DataFrame({"__pos": range(n), "__lab": labels}))
@@ -3806,8 +3735,8 @@ def merge_ordered(left, right, on=None, left_on=None, right_on=None,
         from .operators.rowid import with_rowid
         gsel = [left._col_at(left._columns.get_loc(b)).alias(b)
                 for b in by]
-        pos = with_rowid(left._sdf, "__pa_gpos").select(*gsel,
-                                                        "__pa_gpos")
+        pos, _ = with_rowid(left._sdf, "__pa_gpos")
+        pos = pos.select(*gsel, "__pa_gpos")
         gord = pos.groupBy(*by).agg(
             F.min("__pa_gpos").alias("__pa_gord"))
         gord_df = _DF.from_spark(gord)
@@ -3863,10 +3792,7 @@ def json_normalize(ser, schema: str):
             for j, f in enumerate(fields)]
     out = DataFrame(parsed._index, pd.Index(list(fields)),
                     parsed._sdf.select(*sel))
-    out._mid_index = getattr(ser, "_mid_index", False)
-    out._mid_dense = getattr(ser, "_mid_dense", False)
-    out._mid_origin = getattr(ser, "_mid_origin", None)
-    return out
+    return out._derive_rows(ser)
 
 
 def to_numeric(ser, errors: str = "raise"):

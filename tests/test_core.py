@@ -69,6 +69,12 @@ def test_tail(li):
     assert len(li.tail(7).to_pandas()) == 7
 
 
+def _index_error(fn):
+    with pytest.raises(IndexError) as err:
+        fn()
+    return str(err.value)
+
+
 def test_iat(li, lineitem_pdf):
     # default index = row position in scan order; compare against the
     # parquet row order which pandas preserves.
@@ -76,10 +82,27 @@ def test_iat(li, lineitem_pdf):
     assert li.iat[-1, 4] == lineitem_pdf.iat[-1, 4]
     s = li.l_quantity
     assert s.iat[5] == lineitem_pdf.l_quantity.iat[5]
-    with pytest.raises(IndexError):
-        li.iat[10**9, 0]
+    assert s.iat[-3] == lineitem_pdf.l_quantity.iat[-3]
     with pytest.raises(ValueError):
         li.iat[0]
+    # out-of-range positions, negative ones included, raise pandas'
+    # exact IndexError text for both frames and series
+    n = len(lineitem_pdf)
+    for pos in (n, 10**9, -n - 1):
+        assert (_index_error(lambda: s.iat[pos])
+                == _index_error(lambda: lineitem_pdf.l_quantity.iat[pos]))
+    for key in ((10**9, 0), (-n - 1, 0), (0, 99), (0, -99)):
+        assert (_index_error(lambda: li.iat[key])
+                == _index_error(lambda: lineitem_pdf.iat[key]))
+    # rank evaluates windows, so its plan is no longer in index order;
+    # positional access must still follow the index
+    cols = ["l_quantity", "l_extendedprice"]
+    got = li[cols].rank(method="min")
+    want = lineitem_pdf[cols].rank(method="min")
+    pd.testing.assert_frame_equal(got.iloc[-4:].to_pandas(),
+                                  want.iloc[-4:], check_dtype=False,
+                                  check_index_type=False)
+    assert got.l_quantity.iat[-2] == want.l_quantity.iat[-2]
 
 
 def test_from_pandas_roundtrip(spark):
